@@ -208,6 +208,8 @@ def _committed_minima(sf: float, here: str | None = None) -> dict[str, float]:
         here = os.path.dirname(os.path.abspath(__file__))
     minima: dict[str, float] = {}
     for path in glob.glob(f"{here}/BENCH_*.json"):
+        if os.path.basename(path) == "BENCH_detail.json":
+            continue  # the latest run's uncommitted sidecar, not an artifact
         try:
             with open(path) as f:
                 doc = json.load(f)

@@ -18,8 +18,9 @@ Two defenses, used together (SURVEY.md §5.2):
    pushes exact rounding ties consistently upward, so the two engines'
    differing tie semantics never get a chance to disagree.
 
-Every helper here has a mirror that emits the equivalent DuckDB SQL
-fragment, so the Spark expression and the oracle can never drift.
+Every Spark helper here has a mirror that emits the equivalent DuckDB
+SQL fragment, so the Spark expression and the oracle can never drift;
+``np_round_half_up`` is ``rnd``'s numpy twin for the block lanes.
 """
 
 from __future__ import annotations
@@ -40,6 +41,47 @@ def rnd(col: Column, n: int = 2) -> Column:
     hash — found via the sf0.1 full-oracle sweep (b_scalar_array
     first_elem, c_embed_centroids)."""
     return F.round(col + F.lit(EPS[n]), n) + F.lit(0.0)
+
+
+def np_round_half_up(n: int):
+    """numpy twin of rnd(col, n) for the single-task block lanes:
+    HALF_UP (away-from-zero) rounding of x + EPS[n] to n decimals, with
+    a Decimal audit of knife-edge values (|scaled frac − .5| < 1e-6)
+    where binary floor(+0.5) could disagree with Spark's
+    BigDecimal(shortest-repr) reading. The audit set is empty on every
+    fixture (the EPS nudge keeps true values off exact halves); it
+    exists so a lane can never silently diverge. Returns the rounding
+    function, built in the driver so mapInPandas closures capture it by
+    value."""
+    import numpy as np
+
+    eps = EPS[n]
+    scale = 10.0 ** n
+
+    def r(x):
+        y = np.asarray(x, dtype=np.float64) + eps
+        ay = np.abs(y)
+        scaled = ay * scale
+        out = np.floor(scaled + 0.5)
+        # audit on raveled views so n-dim inputs (the (n, K) sim
+        # matrices) index correctly
+        flat_s, flat_a, flat_o = scaled.ravel(), ay.ravel(), out.reshape(-1)
+        risky = np.flatnonzero(
+            np.abs((flat_s - np.floor(flat_s)) - 0.5) < 1e-6
+        )
+        if len(risky):
+            from decimal import ROUND_HALF_UP, Decimal
+
+            q = Decimal(1).scaleb(-n)
+            for i in risky:
+                flat_o[i] = float(
+                    Decimal(repr(float(flat_a[i]))).quantize(
+                        q, rounding=ROUND_HALF_UP
+                    )
+                ) * scale
+        return np.where(y < 0, -out, out) / scale + 0.0
+
+    return r
 
 
 def cents(col: Column) -> Column:

@@ -32,6 +32,7 @@ from demo_segmenter_spark.functions.compat import (
     EPS,
     cents,
     money_sum,
+    np_round_half_up,
     rnd,
     sql_cents,
     sql_money_sum,
@@ -40,6 +41,7 @@ from demo_segmenter_spark.functions.compat import (
 from demo_segmenter_spark.functions.cache import persist
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table
+from demo_segmenter_spark.streaming.sinks import MEMSINK_STATE_PARTS, run_to_memory
 
 GAP_HOURS = 8  # SURVEY.md §1.2: 8h gap → ~2.1 events/session on fixture
 GAP_US = GAP_HOURS * 3600 * 1_000_000
@@ -528,8 +530,6 @@ def a_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes the oracle deterministic (streaming dedup keeps an
     arrival-order-dependent row for true duplicates). State is evicted
     past the watermark — the 100 TB knob that bounds dedup state."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = (
@@ -543,21 +543,7 @@ def a_stream_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts").alias("ts_us"),
         )
     )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            ev.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(ev, "append", MEMSINK_STATE_PARTS)
 
 
 @query(
@@ -599,8 +585,6 @@ def a_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-day rollup a Kafka-sourced deployment materializes
     continuously; watermark+append mode would bound state — complete
     mode here because the fixture replay ends (final results only)."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -617,21 +601,7 @@ def a_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
 
 
 @query(
@@ -659,8 +629,6 @@ def a_sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each event lands in 4 windows — in streaming that is 4 state rows
     per event per key, which is why hop ratio (size/slide) is the state
     knob at 100 TB."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -676,21 +644,7 @@ def a_sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -762,8 +716,6 @@ def a_stream_stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers both sides in windowed state stores and emits on match;
     Spark's state store plays the same role with watermark-driven
     cleanup. Checked against the SAME DuckDB oracle as the batch twin."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir)
@@ -797,21 +749,7 @@ def a_stream_stream_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("p_ts").alias("purchase_ts_us"),
         F.unix_micros("c_ts").alias("click_ts_us"),
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append", MEMSINK_STATE_PARTS)
 
 
 @query(
@@ -900,8 +838,6 @@ def a_stream_table_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly the GlobalKTable enrichment pattern. Same oracle
     as the batch twin. At 100 TB the static side is a slowly-changing
     dim table; per-batch re-resolution is what picks up dim updates."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir)
@@ -909,21 +845,7 @@ def a_stream_table_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = ev.join(
         F.broadcast(cust), ev.user_id == cust.c_custkey, "left"
     ).select("event_id", "user_id", "event_type", "c_name", "c_mktsegment", "c_acctbal")
-    name = f"stjoin_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append", MEMSINK_STATE_PARTS)
 
 
 @query(
@@ -1279,9 +1201,9 @@ def a_gapfill_locf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(cents(F.col("value"))).alias("cents"))
     )
     out = f"/tmp/dss_locf/{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import memsink_state_parts
+    from demo_segmenter_spark.streaming.sources import stream_state_parts
 
-    with memsink_state_parts(spark):
+    with stream_state_parts(spark, MEMSINK_STATE_PARTS):
         q = (
             daily.writeStream.outputMode("complete")
             .foreachBatch(
@@ -1531,8 +1453,6 @@ def a_anomaly_zscore_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark and emits in append mode. Same oracle as the batch twin:
     on this fixture the scoring history IS the replayed stream, so the
     outputs coincide row-for-row."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hist = load_table(spark, sf_dir, "events").select(
@@ -1554,21 +1474,7 @@ def a_anomaly_zscore_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = j.where(z > 3.0).select(
         "event_id", "event_type", "value", rnd(z, 4).alias("z")
     )
-    name = f"anom_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(scored, "append", MEMSINK_STATE_PARTS)
 
 
 @query("a_funnel_stream", oracle=FUNNEL_ORACLE)
@@ -1686,8 +1592,6 @@ def a_window_dau_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-merge twin trades the dedup store for 7 daily HLLs when <1%
     error is acceptable). The union is map-side; the one shuffle key
     is w_start."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ex = (
@@ -1727,21 +1631,7 @@ def a_window_dau_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"dau_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
 
 
 _PEAK_CONCURRENCY_ORACLE = (
@@ -1907,9 +1797,9 @@ def a_retention_cohorts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = f"/tmp/dss_retention/{uuid.uuid4().hex[:8]}"
     ev = stream_events(spark, sf_dir)
-    from demo_segmenter_spark.streaming.sources import memsink_state_parts
+    from demo_segmenter_spark.streaming.sources import stream_state_parts
 
-    with memsink_state_parts(spark):
+    with stream_state_parts(spark, MEMSINK_STATE_PARTS):
         coh_q = (
             ev.groupBy("user_id")
             .agg(F.min("ts").alias("first_ts"))
@@ -2125,8 +2015,6 @@ def a_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. Rank windows aren't stateful-streaming-expressible
     (results retract as counts grow), which is precisely why the
     topology splits here."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -2139,26 +2027,12 @@ def a_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"trending_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    agg = run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
     w = Window.partitionBy("window_start_us").orderBy(
         F.col("n_events").desc(), "event_type"
     )
     return (
-        spark.table(name)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        agg.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
     )
 
@@ -2343,8 +2217,6 @@ def a_suppress_emit_final_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin's and both hash-match the same oracle. State is evicted
     at flush — the 100 TB contract that keeps windowed state bounded
     by (open windows x keys), not history."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -2362,21 +2234,7 @@ def a_suppress_emit_final_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"suppress_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "append", MEMSINK_STATE_PARTS)
 
 
 @query(
@@ -2693,8 +2551,6 @@ def a_cogroup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_cogroup. One shuffle total on the shared key; per-key state is a
     fixed-width row of counters regardless of stream count — exactly
     why cogroup beats N self-joins at 100 TB."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events, stream_orders
 
     ev_s = stream_events(spark, sf_dir).select(
@@ -2722,21 +2578,7 @@ def a_cogroup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("od_value"),
         )
     )
-    name = f"cogroup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -2846,26 +2688,10 @@ def a_stream_stream_join_outer_stream(
     nulls included — the eviction boundary is modeled, not fudged.
     At 100 TB this is the attribution job emitting 'no-click purchase'
     rows with bounded state, the semantics KStream.leftJoin promises."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     out = _outer_join_parts(stream_events(spark, sf_dir), streaming=True)
-    name = f"ssouter_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "append", MEMSINK_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -2929,8 +2755,6 @@ def a_session_suppress_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted at flush — at 100 TB, state is bounded by sessions still
     inside gap+grace of stream time, the same bound the reference's
     RocksDB session store lives under."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -2949,21 +2773,7 @@ def a_session_suppress_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"sesssup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "append", MEMSINK_STATE_PARTS)
 
 
 # Full-outer variant: BOTH sides' null boundaries verified empirically
@@ -3078,8 +2888,6 @@ def a_stream_stream_join_outer_full_stream(
     flush when the state store proves no future match can arrive (the
     two asymmetric boundaries in the batch twin's docstring).
     Hash-matches the same oracle, nulls from both sides included."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir)
@@ -3120,21 +2928,7 @@ def a_stream_stream_join_outer_full_stream(
             F.unix_micros("c_ts").alias("click_ts_us"),
         )
     )
-    name = f"ssfull_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(out, "append", MEMSINK_STATE_PARTS)
 
 
 # OHLC chronological tiebreak key: zero-padded (epoch_us, event_id)
@@ -3239,8 +3033,6 @@ def a_ohlc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     must survive later batches appending to H. At 100 TB this is the
     continuously-materialized candle rollup: state bounded by (open
     hours x types), evicted at watermark, one shuffle."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     agg = (
@@ -3265,21 +3057,7 @@ def a_ohlc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"ohlc_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "append", MEMSINK_STATE_PARTS)
 
 
 # ---------------------------------------------------------------------------
@@ -4398,8 +4176,6 @@ def a_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     running MAX of per-event horizons, so the twin aggregates
     max(ts) explicitly instead (the batch twin does the same) — both
     hash-match the SAME running-max interval-union oracle."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     gap = (
@@ -4424,21 +4200,7 @@ def a_session_dynamic_gap_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"dynsess_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
 
 
 @query(
@@ -4624,8 +4386,6 @@ def a_new_vs_returning_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per user — identical cardinality to the batch twin's
     (day, user) distinct exchange; production runs the same topology
     with a TTL on the user store."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     per_user = (
@@ -4637,23 +4397,9 @@ def a_new_vs_returning_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("days")
         )
     )
-    name = f"nvr_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            per_user.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    per_user = run_to_memory(per_user, "complete", MEMSINK_STATE_PARTS)
     return (
-        spark.table(name)
-        .select(
+        per_user.select(
             F.array_min("days").alias("first_us"),
             F.explode("days").alias("day_us"),
         )
@@ -4840,8 +4586,6 @@ def a_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of splitting the plan there). In production the same
     topology runs append+watermark with the burn window in a
     foreachBatch, paging within one trigger of an hour closing."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hourly = (
@@ -4856,21 +4600,8 @@ def a_sli_burn_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("tot"),
         )
     )
-    name = f"burn_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            hourly.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    grid = spark.table(name).withColumn(
+    hourly = run_to_memory(hourly, "complete", MEMSINK_STATE_PARTS)
+    grid = hourly.withColumn(
         "hour_idx", (F.col("hour_us") / F.lit(3600000000)).cast("long")
     )
     w6 = Window.orderBy("hour_idx").rangeBetween(-5, 0)
@@ -5603,8 +5334,6 @@ def a_stickiness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode + watermark evicts both stores 30 days past the frontier in
     the production topology (complete-mode replay here, the
     dau-stream precedent)."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     ev = stream_events(spark, sf_dir).select(
@@ -5636,23 +5365,9 @@ def a_stickiness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_mau").cast("long").alias("mau"),
         )
     )
-    name = f"stick_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    agg = run_to_memory(agg, "complete", MEMSINK_STATE_PARTS)
     return (
-        spark.table(name)
-        .filter(F.col("dau") >= 1)
+        agg.filter(F.col("dau") >= 1)
         .select(
             (F.col("d") * 86_400_000_000).alias("day_us"),
             "dau",
@@ -6429,7 +6144,7 @@ def _drift_local_fns():
     costing ~1.5-2.5 s of pure scheduling per query AT ANY DATA SIZE
     (the tail input is the bounded sufficient statistic, so this cost
     never amortizes with scale). The replay is the house bit-exactness
-    discipline: identical IEEE expression order, layer_c's _np_rnd
+    discipline: identical IEEE expression order, np_round_half_up's
     audited-HALF_UP kernel for every round (the ln() ulp risk rides
     the same EPS-nudge + knife-edge-audit argument that certifies the
     committed pagerank/unigram/doremi lanes), exact BIGINT cumsums and
@@ -6445,9 +6160,7 @@ def _drift_local_fns():
     the registered queries' exact column orders."""
     import numpy as np
 
-    from demo_segmenter_spark.operators.layer_c import _np_rnd
-
-    r0, r6 = _np_rnd(0), _np_rnd(6)
+    r0, r6 = np_round_half_up(0), np_round_half_up(6)
 
     def arrays(rows):
         et = [r[0] for r in rows]

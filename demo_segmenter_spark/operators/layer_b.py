@@ -28,6 +28,7 @@ from demo_segmenter_spark.functions.compat import (
     cents,
     money_avg,
     money_sum,
+    np_round_half_up,
     rnd,
     sql_cents,
     sql_money_avg,
@@ -36,6 +37,7 @@ from demo_segmenter_spark.functions.compat import (
 )
 from demo_segmenter_spark.registry import query
 from demo_segmenter_spark.sources import load_table
+from demo_segmenter_spark.streaming.sinks import MEMSINK_STATE_PARTS, run_to_memory
 
 
 # ---------------------------------------------------------------------------
@@ -591,8 +593,6 @@ def b_rollup_hierarchy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance of the fine level composes to the same coarse answers
     as a batch rebuild — the correctness contract behind every
     materialized-rollup refresh pipeline."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hourly = (
@@ -607,23 +607,9 @@ def b_rollup_hierarchy_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("w", "event_type", "n_events", "sum_cents", "n_purchases")
     )
-    name = f"rollup_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            hourly.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    hourly = run_to_memory(hourly, "complete", MEMSINK_STATE_PARTS)
     return (
-        spark.table(name)
-        .groupBy(
+        hourly.groupBy(
             "event_type",
             F.to_date(F.date_trunc("day", F.col("w.start"))).alias("day"),
         )
@@ -1845,7 +1831,7 @@ def b_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of b_ivm_agg, SAME oracle: the retraction
     changelog arrives as seq-ordered micro-batches (inserts, then
-    deletes, then the update retraction pairs — six files via
+    deletes, then the update retraction pairs — four chunks via
     maxFilesPerTrigger=1) and the view is maintained as complete-mode
     aggregation state: one state row per realized group holding the
     running (sum(op), sum(op·cents)) — the live view after every
@@ -1862,11 +1848,12 @@ def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     ch = _ivm_changelog(spark, sf_dir)
     try:
-        # Round-12 (guide §2.4): the six seq/parity chunk files are
-        # written in ONE job instead of six filtered changelog scans.
+        # Round-12 (guide §2.4): the seq/parity chunk files are
+        # written in ONE job instead of one filtered changelog scan
+        # per chunk.
         from demo_segmenter_spark.streaming.sources import (
+            STREAM_STATE_PARTS,
             chunked_parquet_src,
-            stream_state_parts,
         )
 
         # 4 seq-ordered chunks (round-13, measured): the per-batch
@@ -1895,18 +1882,9 @@ def b_ivm_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("op") * F.col("c")).cast("long").alias("cents"),
             )
         )
-        name = f"ivm_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-        )
         # ≤15-group state: a handful of state partitions (guide §2.2)
-        with stream_state_parts(spark):
-            q.start().awaitTermination()
-        snap = spark.table(name).collect()
-        m = spark.createDataFrame(snap, spark.table(name).schema)
+        view = run_to_memory(agg, "complete", STREAM_STATE_PARTS)
+        m = spark.createDataFrame(view.collect(), view.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return _ivm_finish(m, _ivm_direct(spark, sf_dir))
@@ -3093,39 +3071,6 @@ GRAPH_BLOCK_EDGES = int(
 )
 
 
-def _np_half_up6():
-    """numpy twin of rnd(col, 6): HALF_UP (away-from-zero) rounding of
-    x + EPS[6] to 6 decimals, with a Decimal audit of knife-edge
-    values (|scaled frac − .5| < 1e-6) where binary floor(+0.5) could
-    disagree with Spark's BigDecimal(shortest-repr) reading. The audit
-    set is empty on every fixture (the EPS nudge keeps true values off
-    exact halves); it exists so the lane can never silently diverge."""
-    import numpy as np
-
-    eps = EPS[6]
-
-    def r6(x):
-        y = np.asarray(x, dtype=np.float64) + eps
-        ay = np.abs(y)
-        scaled = ay * 1_000_000.0
-        out = np.floor(scaled + 0.5)
-        risky = np.flatnonzero(
-            np.abs((scaled - np.floor(scaled)) - 0.5) < 1e-6
-        )
-        if len(risky):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            for i in risky:
-                out[i] = float(
-                    Decimal(repr(float(ay[i]))).quantize(
-                        Decimal("0.000001"), rounding=ROUND_HALF_UP
-                    )
-                ) * 1_000_000.0
-        return np.where(y < 0, -out, out) / 1_000_000.0 + 0.0
-
-    return r6
-
-
 def _graph_block(pairs: DataFrame, kernel, schema: str) -> DataFrame | None:
     """Gate + gather of the block lane: ``pairs`` (persisted by the
     caller) must hold at most GRAPH_BLOCK_EDGES rows; its single
@@ -3245,7 +3190,7 @@ def b_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_partkey") * 2 + 1).alias("p"),
         ).distinct()
     )
-    r6 = _np_half_up6()
+    r6 = np_round_half_up(6)
     iters, damp = PAGERANK_ITERS, PAGERANK_DAMP
 
     def kern(batches):
@@ -5673,8 +5618,6 @@ def b_agg_bitmap_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_trending. Checked against the SAME word-table oracle as the
     batch twin (minus its in-schema countDistinct certification
     column, which is itself not streamable)."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     words = (
@@ -5688,23 +5631,9 @@ def b_agg_bitmap_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m")
         )
     )
-    name = f"bmd_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            words.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    words = run_to_memory(words, "complete", MEMSINK_STATE_PARTS)
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        words.groupBy("event_type")
         .agg(
             F.sum(F.bit_count("m")).cast("long").alias("n_users_bitmap"),
             F.count("*").cast("long").alias("n_words"),
@@ -6087,8 +6016,6 @@ def b_agg_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overestimate invariant) runs batch-side on the final grid —
     exactly the batch query's gated join. Scale: state 192 rows, the
     exchange carries map-side partials only."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     pairs = F.array(
@@ -6109,21 +6036,7 @@ def b_agg_countmin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "b")
         .agg(F.count("*").alias("c"))
     )
-    name = f"cms_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            grid.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sketch = spark.table(name)
+    sketch = run_to_memory(grid, "complete", MEMSINK_STATE_PARTS)
     ev = load_table(spark, sf_dir, "events").select("user_id")
     probes = (
         ev.filter(F.col("user_id") < 20)
@@ -6321,32 +6234,17 @@ def b_agg_hll_native_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams through (THE canonical streaming-sketch contract). The
     estimate tail (+ the exact twin column for certification) runs
     batch-side on the final register emission."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     reg_s = _hll_registers(
         stream_events(spark, sf_dir).select("event_type", "user_id")
     )
-    name = f"hll_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            reg_s.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    reg_s = run_to_memory(reg_s, "complete", MEMSINK_STATE_PARTS)
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     ex = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_exact")
     )
-    return _hll_estimate(spark.table(name), ex)
+    return _hll_estimate(reg_s, ex)
 
 
 # ---------------------------------------------------------------------------
@@ -7060,8 +6958,6 @@ def b_agg_quantile_sketch_stream(
     matter how much data streams through (THE production shape for
     latency percentiles on a live stream). The estimate tail + exact
     certification twin run batch-side on the final grid emission."""
-    import uuid
-
     from demo_segmenter_spark.streaming.sources import stream_events
 
     hist_s = _qsk_hist(
@@ -7069,20 +6965,7 @@ def b_agg_quantile_sketch_stream(
             "event_type", cents(F.col("value")).alias("c")
         )
     )
-    name = f"qsk_{uuid.uuid4().hex[:8]}"
-    from demo_segmenter_spark.streaming.sources import (
-        memsink_state_parts,
-    )
-
-    with memsink_state_parts(spark):
-        q = (
-            hist_s.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    hist_s = run_to_memory(hist_s, "complete", MEMSINK_STATE_PARTS)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", cents(F.col("value")).alias("c")
     )
@@ -7092,7 +6975,7 @@ def b_agg_quantile_sketch_stream(
     # (tracked, <= types x QSK_BINS rows) re-roots the plan
     from demo_segmenter_spark.functions.cache import local_checkpoint
 
-    return _qsk_tail(local_checkpoint(spark.table(name)), e)
+    return _qsk_tail(local_checkpoint(hist_s), e)
 
 
 # Two-level refinement (round-11, verdict r10 ask #7): the flat grid's

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from demo_segmenter_spark.functions.compat import (
     EPS,
     cents,
+    np_round_half_up,
     rnd,
     sql_cents,
     sql_money_sum,
@@ -981,7 +982,7 @@ def c_sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
     _, cent_sims, train = _kmeans_block_fns()
 
     def kern(batches):
@@ -1152,7 +1153,7 @@ def c_sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
     _, cent_sims, train = _kmeans_block_fns()
     nq, nk, nprobe = KNN_QUERIES, KNN_K, IVF_NPROBE
 
@@ -1566,7 +1567,7 @@ def c_sim_lsh_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
     thr = RHP_COS_THRESHOLD
 
     def kern(batches):
@@ -1679,7 +1680,7 @@ def c_sim_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
 
     def kern(batches):
         import numpy as np
@@ -1845,7 +1846,7 @@ def c_sim_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
     _, cent_sims, train = _kmeans_block_fns()
 
     def kern(batches):
@@ -3174,8 +3175,9 @@ def c_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELF-JOIN — two corpus-sized exchanges of exploded shingle
     STRINGS plus the join — where every sibling dedup query already
     runs the grouped-pairs form: ONE exchange on (block, shingle),
-    pairs emitted per group with pure codegen, shingles as xxhash64
-    longs (~5x narrower rows; pair-set equality modulo 2^-64
+    pairs emitted per group with pure codegen, shingles as 64-bit
+    pd.util.hash_array longs from _hashed_shingles (~5x narrower
+    rows; pair-set equality modulo 2^-64
     collisions is the same argument the c_dedup_ngram oracle already
     accepts). No df cap is applied — this oracle has none, so the
     hot-shingle quadratic risk is identical in both forms (it is the
@@ -4555,9 +4557,9 @@ def c_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vectors, ONE coalesced mapInPandas task scans the corpus once and
 # replays the whole chain in numpy with the house bit-exactness
 # discipline: cumulative-sum folds (the left fold's exact value),
-# elementwise IEEE twins of transform/zip_with, _np_rnd's HALF_UP +
-# Decimal-audit quantization (the _np_half_up6 / _nd_block_fns
-# kernel, generalized over the rounding scale), lexsort total orders.
+# elementwise IEEE twins of transform/zip_with, np_round_half_up's
+# HALF_UP + Decimal-audit quantization (functions/compat.py), lexsort
+# total orders.
 # Row-sum reorderings (X'c, centroid means) ride the same noise-floor
 # argument that already certifies the DuckDB oracle's float sums
 # under the EPS nudge — with the Decimal audit catching any
@@ -4576,45 +4578,6 @@ import os as _os  # noqa: E402 — cap override, see below
 # for the lane tier, and -1 forces the distributed chains (plan dumps
 # / A-B equivalence runs).
 EMB_BLOCK_CAP = int(_os.environ.get("SPARK_GRAFT_EMB_BLOCK_CAP", "20000"))
-
-
-def _np_rnd(n: int):
-    """numpy twin of rnd(col, n): HALF_UP (away-from-zero) rounding of
-    x + EPS[n] to n decimals, with a Decimal audit of knife-edge
-    values (|scaled frac − .5| < 1e-6) where binary floor(+0.5) could
-    disagree with Spark's BigDecimal(shortest-repr) reading. The audit
-    set is empty on every fixture (the EPS nudge keeps true values off
-    exact halves); it exists so the lane can never silently diverge.
-    (The layer_b pagerank kernel is the n=6 instance of this.)"""
-    import numpy as np
-
-    eps = EPS[n]
-    scale = 10.0 ** n
-
-    def r(x):
-        y = np.asarray(x, dtype=np.float64) + eps
-        ay = np.abs(y)
-        scaled = ay * scale
-        out = np.floor(scaled + 0.5)
-        # audit on raveled views so n-dim inputs (the (n, K) sim
-        # matrices) index correctly
-        flat_s, flat_a, flat_o = scaled.ravel(), ay.ravel(), out.reshape(-1)
-        risky = np.flatnonzero(
-            np.abs((flat_s - np.floor(flat_s)) - 0.5) < 1e-6
-        )
-        if len(risky):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            q = Decimal(1).scaleb(-n)
-            for i in risky:
-                flat_o[i] = float(
-                    Decimal(repr(float(flat_a[i]))).quantize(
-                        q, rounding=ROUND_HALF_UP
-                    )
-                ) * scale
-        return np.where(y < 0, -out, out) / scale + 0.0
-
-    return r
 
 
 def _emb_block(raw: DataFrame, kernel, schema: str) -> DataFrame | None:
@@ -4683,7 +4646,7 @@ def _kmeans_block_fns():
     the noise-floor row-sum argument (the oracle's own tolerance)."""
     import numpy as np
 
-    r6 = _np_rnd(6)
+    r6 = np_round_half_up(6)
 
     def unitize(X):
         nrm = np.sqrt(_np_cumdot(X, X))
@@ -4720,7 +4683,7 @@ def _rq_train_np(ids, X):
     code2 values, final d2)."""
     import numpy as np
 
-    r6 = _np_rnd(6)
+    r6 = np_round_half_up(6)
     _, cent_sims, train = _kmeans_block_fns()
     U, cids, C1, cn1 = train(ids, X)
     sims = cent_sims(U, C1, cn1)
@@ -4754,7 +4717,7 @@ def _pq_train_np(ids, X):
     (n,m), d2fin (n,m))."""
     import numpy as np
 
-    r6 = _np_rnd(6)
+    r6 = np_round_half_up(6)
     n, dim = X.shape
     m = PQ_M
     sub = dim // m
@@ -5067,11 +5030,11 @@ def c_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect()). At 100 TB this is exactly distributed power iteration:
     deflate and repeat for the top-k components. Below EMB_BLOCK_CAP
     vectors the block lane replays the iterations in one task (cumsum
-    folds + noise-floor row sums under _np_rnd's audited HALF_UP)."""
+    folds + noise-floor row sums under np_round_half_up's audited HALF_UP)."""
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r2 = _np_rnd(6), _np_rnd(2)
+    r6, r2 = np_round_half_up(6), np_round_half_up(2)
 
     def kern(batches):
         import numpy as np
@@ -5155,7 +5118,7 @@ def c_embed_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4, r2 = _np_rnd(6), _np_rnd(4), _np_rnd(2)
+    r6, r4, r2 = np_round_half_up(6), np_round_half_up(4), np_round_half_up(2)
 
     def kern(batches):
         import numpy as np
@@ -5290,7 +5253,7 @@ def c_embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4 = _np_rnd(6), _np_rnd(4)
+    r6, r4 = np_round_half_up(6), np_round_half_up(4)
 
     def kern(batches):
         import numpy as np
@@ -6223,7 +6186,7 @@ def _unigram_train(
     rank, and every hard-EM round's Viterbi/M-step/ilogp — emitting
     the bounded per-round vocabulary tables. The per-word DP is the
     SAME _uni_viterbi_word the distributed pass runs; counts are
-    exact integers; ilogp rides _np_rnd(0)'s audited HALF_UP (ln
+    exact integers; ilogp rides np_round_half_up(0)'s audited HALF_UP (ln
     under the noise-floor argument that already certifies the DuckDB
     replay). Above the cap the distributed rounds run unchanged —
     the 100 TB answer is also that unigram training runs on a
@@ -6235,7 +6198,7 @@ def _unigram_train(
         .withColumn("wlen", F.length("word").cast("long"))
     )
     if not exceeds_cap(uwords, UNI_BLOCK_CAP):
-        r0 = _np_rnd(0)
+        r0 = np_round_half_up(0)
         maxp, seed_cap, rounds = UNI_MAXP, UNI_SEED, UNI_ROUNDS
 
         def kern(batches):
@@ -7795,7 +7758,7 @@ def c_embed_rq(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
 
     def kern(batches):
         import numpy as np
@@ -7894,7 +7857,7 @@ def c_sim_rq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4 = _np_rnd(6), _np_rnd(4)
+    r6, r4 = np_round_half_up(6), np_round_half_up(4)
     nq, nk = KNN_QUERIES, KNN_K
 
     def kern(batches):
@@ -8019,7 +7982,7 @@ def c_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
     m, sub = PQ_M, 16
 
     def kern(batches):
@@ -8201,7 +8164,7 @@ def c_sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4 = _np_rnd(6), _np_rnd(4)
+    r6, r4 = np_round_half_up(6), np_round_half_up(4)
     nq, m = PQ_QUERIES, PQ_M
 
     def kern(batches):
@@ -11158,7 +11121,7 @@ def c_sim_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r6, r4, r0 = _np_rnd(6), _np_rnd(4), _np_rnd(0)
+    r6, r4, r0 = np_round_half_up(6), np_round_half_up(4), np_round_half_up(0)
     _, cent_sims, train = _kmeans_block_fns()
     nq, nk, nprobe, m, pqk = KNN_QUERIES, KNN_K, IVF_NPROBE, PQ_M, PQ_K
 
@@ -11373,7 +11336,7 @@ def c_sim_dedup_kmeans_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw0 = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    r4 = _np_rnd(4)
+    r4 = np_round_half_up(4)
     _, cent_sims, train = _kmeans_block_fns()
 
     def kern(batches):
@@ -14517,7 +14480,7 @@ def c_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOREMI_BLOCK_CAP (domain, token) rows the weight algebra replays
     in ONE task off the distributed count table (the corpus pass
     stays the certified dataflow) — integer micro-unit arithmetic
-    throughout, ln/exp under the same noise-floor + _np_rnd audit
+    throughout, ln/exp under the same noise-floor + np_round_half_up audit
     that certifies the DuckDB replay's libm."""
     from demo_segmenter_spark.functions.cache import local_checkpoint
 
@@ -14528,7 +14491,7 @@ def c_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     dcnt = persist(
         tok.groupBy("source", "t").agg(F.count("*").alias("ckt"))
     )
-    r0 = _np_rnd(0)
+    r0 = np_round_half_up(0)
     rounds = DOREMI_ROUNDS
 
     def kern(batches):
@@ -16788,37 +16751,17 @@ def _nd_block_fns():
     no module references inside task functions). Each kernel is the
     bit-exact twin of its distributed counterpart:
 
-    - round_half_up: F.round(double)'s HALF_UP (away from zero) —
-      vectorized floor(|x|+0.5) with a Decimal audit of knife-edge
-      values (|frac−.5| < 1e-6), where a binary +0.5 could disagree
-      with Spark's decimal-string BigDecimal reading. The audit set is
-      empty on every fixture (the +EPS nudge keeps scores off exact
-      halves); it exists so the lane can never silently diverge.
-    - sm_of: _nd_sm's micro-unit quantization.
+    - sm_of: _nd_sm's micro-unit quantization — F.round(double)'s
+      HALF_UP under np_round_half_up(0)'s knife-edge audit.
     - score: _nd_score_pairs' gather arithmetic — per-row product,
       cumulative-sum fold (the left fold's exact value), one divide.
     - topk: _nd_topk's per-group sorted slice under the (sm DESC, id)
       total order (lexsort's last key is primary)."""
-    eps = EPS[0]
     np = __import__("numpy")
-
-    def round_half_up(x):
-        ax = np.abs(x)
-        y = np.floor(ax + 0.5)
-        risky = np.flatnonzero(np.abs((ax - np.floor(ax)) - 0.5) < 1e-6)
-        if len(risky):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            for i in risky:
-                y[i] = float(
-                    Decimal(repr(float(ax[i]))).quantize(
-                        Decimal(1), rounding=ROUND_HALF_UP
-                    )
-                )
-        return np.where(x < 0, -y, y)
+    r0 = np_round_half_up(0)
 
     def sm_of(cos):
-        return round_half_up(cos * 1_000_000.0 + eps).astype(np.int64)
+        return r0(cos * 1_000_000.0).astype(np.int64)
 
     def score(ids, V, N, va, vb, chunk=16_384):
         # Two preallocated gather buffers, reused across chunks: the
@@ -16861,7 +16804,7 @@ def _nd_block_fns():
         keep = rank < k
         return v[keep], u[keep], sm[keep]
 
-    return round_half_up, sm_of, score, topk
+    return sm_of, score, topk
 
 
 def _nd_build_block(base: DataFrame, mat, rounds: int) -> DataFrame:
@@ -16887,7 +16830,7 @@ def _nd_build_block(base: DataFrame, mat, rounds: int) -> DataFrame:
     distributed reference replay in tests/test_ann.py; same oracle
     hash at 3 sfs)."""
     ids_b, mat_b, nrm_b = mat
-    _, _, score, topk = _nd_block_fns()
+    _, score, topk = _nd_block_fns()
     nd_k, nd_rcap = ND_K, ND_RCAP
     rhp_cand = _rhp_cand_np
 
@@ -17286,7 +17229,7 @@ def _gs_serve_block(base: DataFrame, g: DataFrame, hops: int, mat) -> DataFrame:
     sc = base.sparkSession.sparkContext
     ev_b = sc.broadcast(edges["v"].to_numpy())
     eu_b = sc.broadcast(edges["u"].to_numpy())
-    _, sm_of, _, _ = _nd_block_fns()
+    sm_of, _, _ = _nd_block_fns()
     knn_q, n_ent, beam_w, nd_k = KNN_QUERIES, GS_ENTRIES, GS_BEAM, ND_K
 
     def walk(batches):
@@ -17909,7 +17852,7 @@ def _lr_gd_local(spark: SparkSession, profs: list) -> DataFrame:
       (libm exp can differ from Math.exp in the last ulp, which is
       why numpy/math.exp are NOT used here);
     - F.round(double)'s HALF_UP via BigDecimal.valueOf semantics =
-      Decimal(repr(x)) (the _nd_block_fns lesson); operands are
+      Decimal(repr(x)) (np_round_half_up's audit lesson); operands are
       positive so HALF_UP == away-from-zero == toward +inf here;
     - `g DIV d` (IntegralDivide on BIGINT) truncates toward zero;
       Python // floors, so negative gradients go through an explicit

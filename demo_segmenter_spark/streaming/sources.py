@@ -200,54 +200,26 @@ def range_chunk_col(col: str, cuts: list[int]) -> "F.Column":
     return c.otherwise(n - 1)
 
 
-def memsink_state_parts(spark: SparkSession) -> "stream_state_parts":
-    """State-partition context for the availableNow memory-sink twins
-    (round-13, measured): their stateful aggregations ran at the
-    session shuffle-partition count (32), paying one near-empty
-    HDFSBackedStateStore instance + per-batch commit per partition —
-    a_ohlc_stream read 6.6 s at 32 parts vs 1.9 s at 4 (rows
-    identical); sessionize-class state (~48 k rows) measured BEST at 4
-    (1 part is worse: one big store commits single-threaded). 4 is the
-    robust right-size across both grid-bounded and session-scale
-    fixture state; production cardinalities override via env. Scan
-    parallelism is unaffected (file source + map-side partial
-    aggregation, guide §2.2); AQE cannot coalesce stateful streaming
-    exchanges, which is why this needs a knob at all."""
-    import os
-
-    return stream_state_parts(
-        spark, parts=int(os.environ.get("SPARK_GRAFT_MEMSINK_STATE_PARTS", "4"))
-    )
+# State-store partition count for bounded-state stream runs; the
+# measured sizing is documented on streaming.sinks.run_to_memory.
+STREAM_STATE_PARTS = 1
 
 
 class stream_state_parts:
     """Context manager pinning ``spark.sql.shuffle.partitions`` for
     the duration of a bounded-state stream run (state-store partition
-    count is fixed at query start from this conf). The twins' state is
-    grid-/profile-bounded (≤ a few hundred rows) by construction, so
-    a handful of state partitions is the right number at ANY corpus
-    scale — the scan side's parallelism is governed by the file
-    source, and the map-side partial aggregation still runs at scan
-    parallelism; only the bounded reduce/state layer narrows (guide
-    §2.2: fewer, larger reduce partitions). Override via
-    SPARK_GRAFT_STREAM_STATE_PARTS for stress runs.
+    count is fixed at query start from this conf; AQE cannot coalesce
+    stateful streaming exchanges). The scan side's parallelism is
+    governed by the file source, and the map-side partial aggregation
+    still runs at scan parallelism; only the bounded reduce/state
+    layer narrows (guide §2.2: fewer, larger reduce partitions). The
+    pin suits state bounded by a grid, profile or session count; state
+    that grows with the event count (dedup, stream-stream joins) is
+    under-partitioned by it at scale."""
 
-    Default 1 (round-12 pass 2, measured): for a ≤ few-hundred-row
-    complete-mode state, every extra state partition is a per-batch
-    HDFSBackedStateStore instance + delta file + task for rows that
-    fit one partition a thousand times over — a_drift_psi_stream solo
-    warm best-of-3 read 4.7 s at 1 part vs 6.5 s at the previous 4.
-    A stream whose state is NOT grid-bounded must not use this
-    manager (none of the callers qualify; the fk-join/cdc twins run
-    their own partitioning)."""
-
-    def __init__(self, spark: SparkSession, parts: int | None = None):
-        import os
-
+    def __init__(self, spark: SparkSession, parts: int = STREAM_STATE_PARTS):
         self.spark = spark
-        self.parts = parts or int(
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "1")
-        )
+        self.parts = parts
 
     def __enter__(self):
         self.old = self.spark.conf.get("spark.sql.shuffle.partitions")

@@ -111,3 +111,19 @@ def test_secondary_anchor_drift_gate(tmp_path):
     }
     assert "q_sec_drifted" not in minima
     assert "q_other_sf" not in minima
+
+
+def test_committed_minima_ignore_detail_sidecar(tmp_path):
+    """bench.py writes the full artifact of its latest run to the
+    uncommitted BENCH_detail.json sidecar; its timings must not mint
+    minima, or one unlucky-fast local run becomes the drift anchor."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+
+    (tmp_path / "BENCH_r1.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q": 1.0}})
+    )
+    (tmp_path / "BENCH_detail.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q": 0.5, "q_local": 0.2}})
+    )
+    assert bench._committed_minima(0.1, here=str(tmp_path)) == {"q": 1.0}

@@ -103,3 +103,37 @@ def test_jvm_sweep_requires_owner_claim(spark):
         release_persisted(spark)
     # tracked-list-only release stays available to everyone
     assert release_persisted() == 0
+
+
+def _temp_tables(spark) -> list[str]:
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+
+def test_memory_sink_twins_leak_no_views(spark):
+    # Every memory-sink stream twin runs through run_to_memory, which
+    # drops the sink's temp view before returning; the returned frame
+    # keeps the sink in its analyzed plan, so it still collects the
+    # same rows after the view is gone.
+    before = _temp_tables(spark)
+    for name in ("a_stream_dedup_stream", "a_sessionize_stream", "a_papi_sessionize"):
+        first = REGISTRY[name].fn(spark, SF_SMOKE)
+        rows = sorted(first.collect())
+        second = REGISTRY[name].fn(spark, SF_SMOKE)
+        assert rows, name
+        assert sorted(second.collect()) == rows, name
+        assert sorted(first.collect()) == rows, name
+    assert _temp_tables(spark) == before
+
+
+def test_memory_sink_has_one_writer():
+    import pathlib
+
+    import demo_segmenter_spark
+
+    root = pathlib.Path(demo_segmenter_spark.__file__).parent
+    hits = {
+        str(p.relative_to(root)): n
+        for p in root.rglob("*.py")
+        if (n := p.read_text().count('format("memory")'))
+    }
+    assert hits == {"streaming/sinks.py": 1}

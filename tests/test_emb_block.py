@@ -58,12 +58,14 @@ def test_emb_block_lanes_match_distributed_lane_on_fixture(
 
 
 def test_np_rnd_matches_spark_half_up_knife_edges():
-    """The generalized _np_rnd(n) kernel on representable knife-edge
-    values: HALF_UP away from zero, EPS nudge must not flip values
-    clearly below the boundary, negative zero normalized away."""
+    """The generalized np_round_half_up(n) kernel on representable
+    knife-edge values: HALF_UP away from zero, EPS nudge must not flip
+    values clearly below the boundary, negative zero normalized away."""
     import numpy as np
 
-    r4 = lc._np_rnd(4)
+    from demo_segmenter_spark.functions.compat import np_round_half_up
+
+    r4 = np_round_half_up(4)
     out = r4(np.array([0.12345, 0.1234449, -0.00004, 1.0]))
     assert abs(out[0] - 0.1235) < 1e-15  # .5 at 4dp rounds up
     assert abs(out[1] - 0.1234) < 1e-15

@@ -133,7 +133,9 @@ def test_pagerank_block_lane_fires_below_cap(spark):
 
     import numpy as np
 
-    r6 = lb._np_half_up6()
+    from demo_segmenter_spark.functions.compat import np_round_half_up
+
+    r6 = np_round_half_up(6)
     # exact representable values on/near the .5e-6 boundary: HALF_UP
     # (away from zero) must round .0000005 up, and the EPS nudge must
     # not flip values clearly below the boundary

@@ -129,7 +129,7 @@ def test_unigram_train_block_lane_matches_distributed(spark, monkeypatch):
     exact row equality for the train table and the heaviest encode
     consumer on the live fixture. The per-word DP is the shared
     _uni_viterbi_word either way; the ilogp quantization rides
-    _np_rnd(0)'s audited HALF_UP."""
+    np_round_half_up(0)'s audited HALF_UP."""
     from demo_segmenter_spark.functions.cache import release_persisted
 
     for q in ("c_token_unigram", "c_token_unigram_encode"):
